@@ -319,17 +319,6 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.ranks.select("url", F.round("x", 6).alias("x"))
 
 
-def q_pagerank_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-rule CSR-block SpMV path (ingest/csr.py)."""
-    from pagerankproject_spark.graph.pagerank import pagerank
-    from pagerankproject_spark.ingest.edges import build_graph_tables as bgt
-
-    g = bgt(spark, _edges(spark, sf_dir))
-    return pagerank(spark, g, epsilon=1e-4, max_iterations=30, spmv="csr").ranks.select(
-        "url", F.round("x", 6).alias("x")
-    )
-
-
 def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full converged HITS. epsilon=1e-6, NOT tighter: the engine's
     residual formula sqrt(2 - 2*S_ap/||a_raw||) (graph/hits.py:118-121)
@@ -2478,7 +2467,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """All 167 keys are oracle-backed (DuckDB twin in oracle_sql(),
+    """All 166 keys are oracle-backed (DuckDB twin in oracle_sql(),
     or a documented rows-only/pytest gate for the non-SQL-expressible
     ones); every key, windowed or not, is re-verified locally by
     tools/check_contract.py against the same oracles.
@@ -2651,7 +2640,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "katz_centrality": q_katz_centrality,
         "host_graph": q_host_graph,
         "doc_chunks": q_doc_chunks,
-        "pagerank_csr": q_pagerank_csr,
         "clustering_coefficient": q_clustering_coefficient,
         "pagerank_personalized": q_pagerank_personalized,
         "events_sliding": q_events_sliding,
@@ -3557,7 +3545,6 @@ hpairs as (select src_host as src, dst_host as dst from hg),{_sql_coloring_auto(
         "pagerank_personalized": g + "," + rsql.sql_pagerank_ranks(
             epsilon=1e-6, max_iterations=60, v_pred="url like '%p1%'"
         ),
-        "pagerank_csr": f"{g},{rsql.sql_pagerank_ranks(epsilon=1e-4, max_iterations=30)}",
         "hits_scores": f"{g},{rsql.sql_hits_scores(epsilon=1e-6, max_iterations=60)}",
         "salsa_scores": f"{g},{rsql.sql_salsa_scores()}",
         "pagerank_topics": f"{g},{rsql.sql_pagerank_topics(TOPIC_PREDS, alpha=0.85, iterations=15)}",

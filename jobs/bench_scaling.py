@@ -603,10 +603,9 @@ def main() -> None:
         "cogroup exchange ships the full block table through Arrow every",
         "iteration, which erases the sort-once advantage in local mode; the",
         "DataFrame path stays entirely inside whole-stage codegen on cached",
-        "columnar batches. Conclusion (kept): `spmv=\"dataframe\"` is the default;",
-        "the CSR layout remains the persisted physical format story (bucketed",
-        "block tables avoid the per-iteration exchange on a real cluster) and is",
-        "tested for exact numeric agreement (tests/test_csr.py).",
+        "columnar batches. The cogrouped CSR path (`spmv=\"csr\"`) has since been",
+        "removed; the dst-partitioned on-disk blocks of `spmv=\"blocks\"` replaced",
+        "it as the layout for edges that stay distributed.",
         "",
     ]
     # regenerate ONLY the scaling-harness-owned head; preserve the

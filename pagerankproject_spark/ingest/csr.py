@@ -1,35 +1,17 @@
-"""Per-partition CSR adjacency blocks — north_rule physical layout
-("...a salted, hash-partitioned (src,dst) edge table plus per-partition
-CSR adjacency blocks").
+"""dst-partitioned on-disk CSR^T blocks — the edge layout of the
+broadcast-vertex SpMV (`pagerank(spmv="blocks")`).
 
 Reference anchor: the COO -> torch.sparse build step
 (/root/reference/pagerank.py:72-76); the reference's single matrix
-becomes one CSR block per hash partition of the src_id space.
+becomes one CSR^T block per hash partition of the dst_id space.
 
-Block schema (one row per partition):
-
-  part_id  int      pmod(murmur3(src_id), P) — IDENTICAL to the hash
-                    placement of `repartition(P, 'src_id')`, so a block
-                    is exactly co-located with the rank rows whose ids
-                    hash to the same partition.
-  src_ids  array<long>    sorted distinct sources in the block
-  indptr   array<int>     CSR row pointers, len(src_ids)+1
-  dst_ids  array<long>    destinations, grouped by source
-  weights  array<double>  1/outdeg weights, parallel to dst_ids
-
-Built with ONE `mapInArrow` pass over the sorted edge partitions (numpy
-inside Arrow batches — no per-row Python). The block table is tiny
-relative to the edge table (3 arrays per partition) and is the layout a
-100-TB deployment would persist: scanning a block streams edges in
-src-sorted order with 16 bytes/edge and zero join machinery.
-
-`spmv_csr` is the consumer: y[dst] = sum over edges w * x[src],
-computed per block with numpy (np.repeat + bincount-style grouping)
-after a single co-partitioned join of ranks onto blocks, then one
-aggregation shuffle of the partial sums — the same two-exchange
-structure as the DataFrame SpMV, with the per-edge arithmetic moved
-from codegen'd JVM rows to vectorized numpy. Tests assert exact
-agreement with the DataFrame path.
+`write_npy_blocks` makes ONE `mapInArrow` pass over the edge table,
+sorted by (part, dst) inside each partition, and saves each block's
+arrays as .npy files (numpy inside Arrow batches — no per-row Python).
+`blocks_spmv` is the consumer: y[dst] = sum over in-edges w * x[src],
+one shuffle-free Spark job per call with x broadcast, each task
+streaming its block from local storage. Blocks own disjoint dst sets,
+so the partial results concatenate into y with no cross-block sum.
 """
 
 from __future__ import annotations
@@ -45,109 +27,6 @@ from pyspark.sql import functions as F
 
 from .edges import GraphTables
 
-CSR_SCHEMA = (
-    "part_id int, src_ids array<long>, indptr array<int>, "
-    "dst_ids array<long>, weights array<double>"
-)
-
-
-def build_csr_blocks(g: GraphTables) -> DataFrame:
-    """weighted_edges -> one CSR block row per src_id hash partition."""
-    P = g.num_partitions
-    edges = (
-        g.weighted_edges.select(
-            F.pmod(F.hash("src_id"), F.lit(P)).alias("part_id"),
-            "src_id",
-            "dst_id",
-            "weight",
-        )
-        .repartition(P, "part_id")
-        .sortWithinPartitions("part_id", "src_id", "dst_id")
-    )
-
-    def to_blocks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        t = pa.concat_tables(tables)
-        if t.num_rows == 0:
-            return
-        pid = t["part_id"].to_numpy()
-        src = t["src_id"].to_numpy()
-        dst = t["dst_id"].to_numpy()
-        w = t["weight"].to_numpy()
-        # a physical partition can hold several part_id values (value-hash
-        # placement): rows are sorted by (part_id, src_id, dst_id), so each
-        # part_id is one contiguous run -> one CSR block per run
-        for part_id in np.unique(pid):
-            sel = pid == part_id
-            s, d, wt = src[sel], dst[sel], w[sel]
-            uniq, counts = np.unique(s, return_counts=True)
-            indptr = np.zeros(len(uniq) + 1, dtype=np.int32)
-            np.cumsum(counts, out=indptr[1:])
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "part_id": pa.array([int(part_id)], pa.int32()),
-                    "src_ids": pa.array([uniq.tolist()], pa.list_(pa.int64())),
-                    "indptr": pa.array([indptr.tolist()], pa.list_(pa.int32())),
-                    "dst_ids": pa.array([d.tolist()], pa.list_(pa.int64())),
-                    "weights": pa.array([wt.tolist()], pa.list_(pa.float64())),
-                }
-            )
-
-    return edges.mapInArrow(to_blocks, CSR_SCHEMA)
-
-
-def spmv_csr(
-    spark, csr_blocks: DataFrame, ranks: DataFrame, num_partitions: int
-) -> DataFrame:
-    """y = P^T x over CSR blocks: returns (dst_id, msg).
-
-    ranks: (id, x). The rank rows are routed to their src-hash partition
-    (same murmur3 placement as the blocks) and cogrouped with the one
-    block of that partition; numpy does the per-edge multiply + partial
-    dst aggregation; a final groupBy sums partials across blocks.
-    """
-    routed = ranks.select(
-        F.pmod(F.hash("id"), F.lit(num_partitions)).alias("part_id"), "id", "x"
-    )
-
-    def mul(key, block_pdf, ranks_pdf):
-        import pandas as pd
-
-        if block_pdf.empty or ranks_pdf.empty:
-            return pd.DataFrame({"dst_id": [], "partial": []})
-        row = block_pdf.iloc[0]
-        src_ids = np.asarray(row["src_ids"], dtype=np.int64)
-        indptr = np.asarray(row["indptr"], dtype=np.int64)
-        dst = np.asarray(row["dst_ids"], dtype=np.int64)
-        w = np.asarray(row["weights"], dtype=np.float64)
-        # x lookup for this block's sources (sources are a subset of the
-        # ids routed to this partition)
-        rid = ranks_pdf["id"].to_numpy()
-        rx = ranks_pdf["x"].to_numpy()
-        order = np.argsort(rid, kind="stable")
-        pos = np.searchsorted(rid[order], src_ids)
-        x_src = rx[order][pos]
-        # expand x to edge granularity and multiply
-        counts = np.diff(indptr)
-        contrib = w * np.repeat(x_src, counts)
-        # partial aggregation by dst within the block
-        uniq_dst, inv = np.unique(dst, return_inverse=True)
-        partial = np.bincount(inv, weights=contrib, minlength=len(uniq_dst))
-        return pd.DataFrame({"dst_id": uniq_dst, "partial": partial})
-
-    partials = (
-        csr_blocks.groupBy("part_id")
-        .cogroup(routed.groupBy("part_id"))
-        .applyInPandas(mul, "dst_id long, partial double")
-    )
-    return partials.groupBy("dst_id").agg(F.sum("partial").alias("msg"))
-
-
-# ---------------------------------------------------------------------------
-# dst-partitioned on-disk blocks — the broadcast-vertex SpMV layout
-# ---------------------------------------------------------------------------
 
 @dataclass
 class NpyBlockSet:

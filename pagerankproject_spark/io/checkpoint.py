@@ -14,7 +14,10 @@ the session (spark.sql.catalog.*) — same protocol, `writeTo(...).
 createOrReplace()` per iteration with metrics in the table properties.
 
 Per-partition lineage is harvested from the committed parquet footers
-(driver-side pyarrow metadata scan — no extra Spark job).
+(driver-side pyarrow metadata scan — no extra Spark job). State that
+lives on the driver (a `pyarrow.Table`) is written with pyarrow in the
+same layout, so its checkpoint launches no Spark job either and reads
+back like any other.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 # underscore prefix: Spark's file index ignores it (like _SUCCESS), so the
@@ -53,12 +58,18 @@ class ParquetCheckpointer:
     def _iter_dir(self, iteration: int) -> str:
         return os.path.join(self.dir, f"iter={iteration:06d}")
 
-    def write(self, df: DataFrame, iteration: int, metrics: dict) -> CheckpointInfo:
+    def write(
+        self, data: DataFrame | pa.Table, iteration: int, metrics: dict
+    ) -> CheckpointInfo:
         final = self._iter_dir(iteration)
         tmp = final + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
+        if isinstance(data, pa.Table):
+            os.makedirs(tmp)
+            pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
+        else:
+            data.write.mode("overwrite").parquet(tmp)
         lineage = self._partition_lineage(tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
@@ -74,10 +85,6 @@ class ParquetCheckpointer:
     @staticmethod
     def _partition_lineage(path: str) -> list[dict]:
         """Per-partition (file) row counts + bytes from parquet footers."""
-        try:
-            import pyarrow.parquet as pq
-        except Exception:  # pragma: no cover
-            return []
         out = []
         for name in sorted(os.listdir(path)):
             if not name.endswith(".parquet"):

@@ -98,13 +98,22 @@ def no_aqe(spark: SparkSession):
         spark.conf.set(key, prev)
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 16g: a fixed 16g heap on a 15 GiB
+    host with no swap gets the JVM OOM-killed once the heap grows."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, ram // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "pagerankproject-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; real cluster deployments override upward.
@@ -121,7 +130,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # G1 with a large heap and 32 mutator threads showed multi-second
         # evacuation pauses and 5-7x iteration-time noise on the iterative
         # loops; throughput-oriented ParallelGC is flat and fast for this

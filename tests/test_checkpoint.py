@@ -4,7 +4,6 @@ carries per-partition lineage + metrics (operator #27/#28)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -18,59 +17,129 @@ from pagerankproject_spark.io.checkpoint import ParquetCheckpointer
 from .conftest import edges_df
 
 
-def test_pagerank_resume_identical(spark, tmp_path):
+# every spmv mode writes and resumes the same checkpoint; "auto" is the
+# driver-local loop at these sizes
+SPMV = ("auto", "blocks", "dataframe")
+
+
+@pytest.fixture(scope="module")
+def small_g(spark):
     g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+    yield g
+    g.unpersist()
 
-    full = pagerank(spark, g, checkpoint_dir=str(tmp_path / "full"))
-    want = {r["url"]: r["x"] for r in full.ranks.collect()}
 
-    # interrupted run: stop after 7 iterations (simulates a crash)
-    partial = pagerank(
-        spark, g, max_iterations=7, checkpoint_dir=str(tmp_path / "ck")
-    )
-    assert not partial.converged
+def _ranks(res):
+    return {r["url"]: r["x"] for r in res.ranks.collect()}
 
-    resumed = pagerank(
-        spark, g, checkpoint_dir=str(tmp_path / "ck"), resume=True
-    )
-    got = {r["url"]: r["x"] for r in resumed.ranks.collect()}
+
+def test_pagerank_resume_identical(spark, small_g, tmp_path):
+    for spmv in SPMV:
+        full = pagerank(
+            spark, small_g, spmv=spmv, checkpoint_dir=str(tmp_path / spmv / "full")
+        )
+        want = _ranks(full)
+
+        # interrupted run: stop after 7 iterations (simulates a crash)
+        ck = str(tmp_path / spmv / "ck")
+        partial = pagerank(spark, small_g, spmv=spmv, max_iterations=7, checkpoint_dir=ck)
+        assert not partial.converged, spmv
+
+        resumed = pagerank(spark, small_g, spmv=spmv, checkpoint_dir=ck, resume=True)
+        got = _ranks(resumed)
+        assert resumed.converged, spmv
+        for url, val in want.items():
+            assert got[url] == pytest.approx(val, abs=1e-12), (spmv, url)
+        assert resumed.iterations == full.iterations, spmv
+        # the first 7 residuals come from the checkpoint
+        assert resumed.residuals[:7] == partial.residuals, spmv
+        for a, b in zip(resumed.residuals, full.residuals):
+            # resumed dataframe iterations sum over parquet-read partition
+            # row order, the uninterrupted run over join-output order: FP
+            # reduction noise is inherent (SURVEY §4.3); the contract
+            # operates at the 1e-6 epsilon scale
+            assert a == pytest.approx(b, rel=1e-6, abs=1e-9), spmv
+
+
+@pytest.mark.parametrize(
+    "writer,reader",
+    [("auto", "dataframe"), ("dataframe", "blocks"), ("blocks", "auto")],
+)
+def test_pagerank_resume_across_modes(spark, small_g, tmp_path, writer, reader):
+    """A checkpoint written by one spmv mode resumes in another to the
+    uninterrupted run's ranks and iteration count."""
+    full = pagerank(spark, small_g, spmv=reader)
+    ck = str(tmp_path / "ck")
+    pagerank(spark, small_g, spmv=writer, max_iterations=7, checkpoint_dir=ck)
+    resumed = pagerank(spark, small_g, spmv=reader, checkpoint_dir=ck, resume=True)
     assert resumed.converged
+    assert resumed.iterations == full.iterations
+    want, got = _ranks(full), _ranks(resumed)
     for url, val in want.items():
         assert got[url] == pytest.approx(val, abs=1e-12), url
-    assert len(resumed.residuals) == len(full.residuals)
-    for a, b in zip(resumed.residuals, full.residuals):
-        # resumed iterations sum over parquet-read partition row order,
-        # the uninterrupted run over join-output order: FP reduction
-        # noise ~1e-14 in residual^2 is inherent (SURVEY §4.3); the
-        # contract operates at the 1e-6 epsilon scale
-        assert a == pytest.approx(b, rel=1e-6, abs=1e-9)
 
 
-def test_checkpoint_metadata_lineage(spark, tmp_path):
-    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
-    pagerank(spark, g, max_iterations=3, checkpoint_dir=str(tmp_path))
-    ck = ParquetCheckpointer(str(tmp_path), "pagerank")
-    info = ck.latest()
-    assert info is not None and info.iteration == 2
-    m = info.metrics
-    assert {"residual", "dangling_mass", "alpha", "n", "edges", "per_partition"} <= set(m)
-    assert m["n_partitions"] == len(m["per_partition"]) > 0
-    assert all(p["rows"] >= 0 and p["bytes"] > 0 for p in m["per_partition"])
-    total_rows = sum(p["rows"] for p in m["per_partition"])
-    assert total_rows == g.n
+def test_pagerank_resume_refuses_other_run(spark, small_g, tmp_path):
+    """resume=True refuses a checkpoint written for another alpha,
+    personalization or graph, naming the field that differs; the
+    matching run still resumes from it."""
+    from pyspark.sql import functions as F
+
+    ck = str(tmp_path)
+    v = F.col("id") < 3
+    pagerank(spark, small_g, v_expr=v, max_iterations=3, checkpoint_dir=ck)
+    with pytest.raises(ValueError, match="alpha=0.85 there"):
+        pagerank(spark, small_g, v_expr=v, alpha=0.8, checkpoint_dir=ck, resume=True)
+    # same support size and sum, other support: only v_moment differs
+    with pytest.raises(ValueError, match="v_moment="):
+        pagerank(
+            spark, small_g, spmv="dataframe", checkpoint_dir=ck, resume=True,
+            v_expr=F.col("id") >= 3,
+        )
+    g2 = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES[:-1]))
+    with pytest.raises(ValueError, match="edges=10 there"):
+        pagerank(spark, g2, spmv="blocks", v_expr=v, checkpoint_dir=ck, resume=True)
+    g2.unpersist()
+    assert pagerank(spark, small_g, v_expr=v, checkpoint_dir=ck, resume=True).converged
 
 
-def test_uncommitted_checkpoint_ignored(spark, tmp_path):
-    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
-    pagerank(spark, g, max_iterations=4, checkpoint_dir=str(tmp_path))
-    ck = ParquetCheckpointer(str(tmp_path), "pagerank")
-    latest = ck.latest()
-    # simulate an aborted write: newer dir without the metrics commit marker
-    bad = os.path.join(ck.dir, "iter=000099")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "part-0.parquet"), "wb") as f:
-        f.write(b"garbage")
-    assert ck.latest().iteration == latest.iteration
+def test_checkpoint_metadata_lineage(spark, small_g, tmp_path):
+    for spmv in SPMV:
+        pagerank(spark, small_g, spmv=spmv, max_iterations=3,
+                 checkpoint_dir=str(tmp_path / spmv))
+        ck = ParquetCheckpointer(str(tmp_path / spmv), "pagerank")
+        info = ck.latest()
+        assert info is not None and info.iteration == 2, spmv
+        m = info.metrics
+        assert {
+            "residual", "dangling_mass", "norm", "alpha", "n", "edges",
+            "v_sum", "v_sq", "v_moment", "per_partition",
+        } <= set(m), spmv
+        assert m["n_partitions"] == len(m["per_partition"]) > 0, spmv
+        assert all(p["rows"] >= 0 and p["bytes"] > 0 for p in m["per_partition"])
+        total_rows = sum(p["rows"] for p in m["per_partition"])
+        assert total_rows == small_g.n, spmv
+
+
+def test_uncommitted_checkpoint_ignored(spark, small_g, tmp_path):
+    for spmv in SPMV:
+        pagerank(spark, small_g, spmv=spmv, max_iterations=4,
+                 checkpoint_dir=str(tmp_path / spmv))
+        ck = ParquetCheckpointer(str(tmp_path / spmv), "pagerank")
+        latest = ck.latest()
+        # simulate an aborted write: newer dir without the metrics commit
+        # marker, and a half-written .tmp dir
+        for name in ("iter=000099", "iter=000098.tmp"):
+            bad = os.path.join(ck.dir, name)
+            os.makedirs(bad)
+            with open(os.path.join(bad, "part-0.parquet"), "wb") as f:
+                f.write(b"garbage")
+        assert ck.latest().iteration == latest.iteration, spmv
+        # and resume continues from the committed one
+        resumed = pagerank(spark, small_g, spmv=spmv,
+                           checkpoint_dir=str(tmp_path / spmv), resume=True)
+        assert resumed.converged, spmv
+        assert resumed.residuals[:4] == latest.metrics["residuals"], spmv
 
 
 def test_components_resume_identical(spark, tmp_path):

@@ -78,49 +78,29 @@ def test_spark_personalization_matches_oracle(spark):
         assert got[url] == pytest.approx(val, abs=1e-6), url
 
 
-def test_local_spmv_matches_dataframe_and_goldens(spark):
-    """spmv='local' (driver numpy loop) returns the same per-url ranks
-    as the distributed path and the README goldens."""
-    from fixtures.graphs import SMALL_GRAPH_EDGES, SMALL_GRAPH_GOLDEN_RANKS
-    from pagerankproject_spark.graph.pagerank import pagerank
-    from pagerankproject_spark.ingest.edges import build_graph_tables
-
-    from .conftest import edges_df
-
-    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
-    df_res = pagerank(spark, g, epsilon=1e-6, max_iterations=1000)
-    lc_res = pagerank(spark, g, epsilon=1e-6, max_iterations=1000, spmv="local")
-    a = {r["url"]: r["x"] for r in df_res.ranks.collect()}
-    b = {r["url"]: r["x"] for r in lc_res.ranks.collect()}
-    assert set(a) == set(b)
-    for url in a:
-        assert abs(a[url] - b[url]) < 1e-12, (url, a[url], b[url])
-    for url, want in SMALL_GRAPH_GOLDEN_RANKS.items():
-        assert abs(b[url] - want) < 1e-4
-    assert lc_res.iterations == df_res.iterations
-
-
-def test_blocks_spmv_matches_dataframe_and_goldens(spark):
-    """spmv='blocks' (dst-partitioned on-disk CSR blocks + broadcast
-    vertex state) returns the same per-url ranks, trajectory, and
-    iteration count as the distributed path and the README goldens —
-    including dangling vertices and a personalization vector."""
+@pytest.mark.parametrize("spmv", ["local", "blocks", "dataframe"])
+def test_spmv_mode_matches_oracle_and_goldens(spark, spmv):
+    """Each spmv mode returns the oracle's per-url ranks and residual
+    trajectory and the README goldens — including dangling vertices and
+    a personalization vector."""
     from pyspark.sql import functions as F
 
     from pagerankproject_spark.graph.pagerank import pagerank
     from pagerankproject_spark.ingest.edges import build_graph_tables
 
     g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
-    df_res = pagerank(spark, g, epsilon=1e-6, max_iterations=1000)
-    bl_res = pagerank(spark, g, epsilon=1e-6, max_iterations=1000, spmv="blocks")
-    a = {r["url"]: r["x"] for r in df_res.ranks.collect()}
-    b = {r["url"]: r["x"] for r in bl_res.ranks.collect()}
-    assert set(a) == set(b)
-    for url in a:
-        assert abs(a[url] - b[url]) < 1e-12, (url, a[url], b[url])
+    res = pagerank(spark, g, epsilon=1e-6, max_iterations=1000, spmv=spmv)
+    got = {r["url"]: r["x"] for r in res.ranks.collect()}
+    oracle, oracle_res = pagerank_by_url(SMALL_GRAPH_EDGES)
+    assert set(got) == set(oracle)
+    for url, val in oracle.items():
+        assert got[url] == pytest.approx(val, abs=1e-12), url
     for url, want in SMALL_GRAPH_GOLDEN_RANKS.items():
-        assert abs(b[url] - want) < 1e-4
-    assert bl_res.iterations == df_res.iterations
+        assert got[url] == pytest.approx(want, abs=1e-4), url
+    assert res.converged
+    assert res.iterations == len(oracle_res) == SMALL_GRAPH_GOLDEN_ITERATIONS
+    for a, b in zip(res.residuals, oracle_res):
+        assert a == pytest.approx(b, abs=1e-9)
 
     # weblike graph with dangling vertices + personalization, vs oracle
     pairs = make_weblike(seed=13, n_nodes=150, m_edges=900)
@@ -132,7 +112,7 @@ def test_blocks_spmv_matches_dataframe_and_goldens(spark):
         v_expr=F.col("url").endswith("2") | F.col("url").endswith("5"),
         epsilon=1e-6,
         max_iterations=1000,
-        spmv="blocks",
+        spmv=spmv,
     )
     oracle, _ = pagerank_by_url(pairs, personalization_matches=matches)
     got = {r["url"]: r["x"] for r in res.ranks.collect()}
@@ -142,33 +122,57 @@ def test_blocks_spmv_matches_dataframe_and_goldens(spark):
     g2.unpersist()
 
 
-def test_blocks_spmv_checkpoint_resume(spark, tmp_path):
-    """blocks mode writes the same checkpoint protocol as the
-    distributed loop and resumes to an identical fixpoint."""
+def test_dataframe_residuals_match_oracle(spark):
+    """The dataframe loop's squared residual is a sum of small terms, not
+    1 - 2 u.x_prev/N + |x_prev|^2 (which loses it to rounding): its
+    trajectory matches the float64 oracle's to 1e-6 relative or 1e-13
+    absolute, ~50x the ~2e-15 rounding floor of either side, all the way
+    down to epsilon = 1e-9. The one-pass form was off by 40% at 4e-8."""
     from pagerankproject_spark.graph.pagerank import pagerank
     from pagerankproject_spark.ingest.edges import build_graph_tables
 
-    pairs = make_weblike(seed=17, n_nodes=100, m_edges=600)
+    pairs = make_weblike(seed=5, n_nodes=3000, m_edges=30000)
     g = build_graph_tables(spark, edges_df(spark, pairs))
-    ck = str(tmp_path / "ck")
+    res = pagerank(spark, g, epsilon=1e-9, max_iterations=200, spmv="dataframe")
+    _, want = pagerank_by_url(pairs, epsilon=1e-9, max_iterations=200)
+    assert res.converged
+    assert len(res.residuals) == len(want)
+    for i, (a, b) in enumerate(zip(res.residuals, want)):
+        assert a == pytest.approx(b, rel=1e-6, abs=1e-13), i
+    g.unpersist()
 
-    full = pagerank(spark, g, epsilon=1e-6, max_iterations=1000, spmv="blocks")
-    # run 1: stop early, checkpointing every iteration
-    pagerank(
-        spark, g, epsilon=1e-6, max_iterations=4, spmv="blocks",
-        checkpoint_dir=ck, checkpoint_interval=1,
-    )
-    # run 2: resume to convergence
-    resumed = pagerank(
-        spark, g, epsilon=1e-6, max_iterations=1000, spmv="blocks",
-        checkpoint_dir=ck, checkpoint_interval=1, resume=True,
-    )
-    assert resumed.converged
-    assert resumed.iterations == full.iterations
-    a = {r["url"]: r["x"] for r in full.ranks.collect()}
-    b = {r["url"]: r["x"] for r in resumed.ranks.collect()}
-    for url in a:
-        assert abs(a[url] - b[url]) < 1e-12, url
+
+@pytest.mark.parametrize("spmv,per_iteration", [
+    ("local", 0), ("blocks", 1), ("dataframe", 4),
+])
+def test_spark_jobs_per_iteration(spark, tmp_path, spmv, per_iteration):
+    """Spark jobs per iteration with a checkpoint every iteration, as the
+    module docstring states: the local driver loop and its pyarrow
+    checkpoint launch none, blocks one (the SpMV), dataframe four (two
+    broadcast joins, the localCheckpoint that carries the Observation,
+    and the checkpoint write)."""
+    from pagerankproject_spark.graph.pagerank import pagerank
+    from pagerankproject_spark.ingest.edges import build_graph_tables
+
+    sc = spark.sparkContext
+    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+
+    def jobs(iterations):
+        group = f"pagerank-{spmv}-{iterations}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(
+                spark, g, spmv=spmv, epsilon=0.0, max_iterations=iterations,
+                checkpoint_dir=str(tmp_path / group), checkpoint_interval=1,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs(1)  # first use materializes the graph tables' caches
+    # the difference cancels the per-call jobs (base build, result)
+    assert jobs(7) - jobs(3) == 4 * per_iteration
     g.unpersist()
 
 
